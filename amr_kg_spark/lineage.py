@@ -10,9 +10,18 @@ catalog jar, so the same contract is implemented on parquet directories:
   the pipeline after a crash redoes only uncommitted stages;
 - every commit appends per-partition rows to ``<workdir>/lineage/``:
   (run_id, stage, partition_id, rows, wall_ms, snapshot) — the audit
-  trail the north_rule requires; per-partition counts are computed
-  declaratively via ``spark_partition_id`` (one extra cheap aggregation,
-  no collect of data).
+  trail the north_rule requires.
+
+A commit costs one Spark job, the stage write itself. The per-partition
+counts are exact and come from the committed files' parquet footers:
+``partition_id`` is the write task that produced a file (Spark's
+``part-NNNNN-…`` name), so per-stage sums equal the stage's row count,
+while the row grouping follows the write tasks rather than the partitions
+of a later read. The lineage rows are one small parquet file per commit,
+written on the driver under a dot-prefixed temp name (hidden from Spark's
+readers) and renamed into place. The stage is read back with its known
+schema, and lineage()/metrics() with ``LINEAGE_SCHEMA``, so no read
+launches a schema-inference job.
 
 Stage outputs are deterministic (engine rule: deterministic xxhash64 ids,
 no monotonically_increasing_id / Date.now in plans), so kill+resume yields
@@ -22,13 +31,52 @@ a bit-identical triple set — asserted in tests/test_resume.py.
 from __future__ import annotations
 
 import os
+import re
 import shutil
 import time
 import uuid
-from collections.abc import Callable
+from collections.abc import Callable, Iterable
 
+import pyarrow as pa
+import pyarrow.parquet as pq
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.pandas.types import to_arrow_schema
+
+from .schemas import LINEAGE as LINEAGE_SCHEMA
+
+_PART_FILE = re.compile(r"part-(\d+)-")
+
+
+def partition_row_counts(files: Iterable[str]) -> dict[int, int]:
+    """Exact rows per write task of a committed output, read from the
+    parquet footers of its data files (paths or URIs). The task's
+    partition id is the ``NNNNN`` of Spark's ``part-NNNNN-…`` file name;
+    counts are summed per id because a partitioned table repeats the same
+    name under every ``col=val/`` directory. A data file named any other
+    way raises: its rows cannot be attributed, and skipping it would make
+    the audit trail silently under-count."""
+    counts: dict[int, int] = {}
+    for f in files:
+        m = _PART_FILE.match(os.path.basename(f))
+        if m is None:
+            raise ValueError(
+                f"committed data file {f!r} is not named part-<int>-...; "
+                "cannot attribute its rows to a write task"
+            )
+        pid = int(m.group(1))
+        counts[pid] = counts.get(pid, 0) + pq.read_metadata(f).num_rows
+    return counts
+
+
+def _data_files(out: str) -> list[str]:
+    """The data files of a stage dir: everything Spark's readers do not
+    treat as hidden (``_SUCCESS``, ``.crc`` checksums, temp names)."""
+    return [
+        os.path.join(out, f)
+        for f in sorted(os.listdir(out))
+        if not f.startswith(("_", "."))
+    ]
 
 
 class StageRunner:
@@ -116,24 +164,30 @@ class StageRunner:
             shutil.rmtree(out)
         os.rename(tmp, out)
 
-        committed = self.spark.read.parquet(out)
-        lineage = (
-            committed.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").cast("long").alias("rows"))
-            .select(
-                F.lit(self.run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                F.col("partition_id"),
-                "rows",
-                F.lit(wall_ms).cast("long").alias("wall_ms"),
-                F.lit(os.path.basename(out)).alias("snapshot"),
-            )
+        rows = [
+            (self.run_id, stage, pid, n, wall_ms, os.path.basename(out))
+            for pid, n in sorted(partition_row_counts(_data_files(out)).items())
+        ]
+        self._append_lineage(stage, rows)
+        return self.spark.read.schema(df.schema).parquet(out)
+
+    def _append_lineage(self, stage: str, rows: list[tuple]) -> None:
+        """One parquet file per commit, written on the driver: dot-prefixed
+        while being written (Spark's readers skip hidden names, so a crash
+        mid-write leaves nothing visible), then renamed into place."""
+        lin = self._lineage_dir()
+        os.makedirs(lin, exist_ok=True)
+        name = f"{self.run_id}-{stage}-{uuid.uuid4().hex[:8]}.parquet"
+        tmp = os.path.join(lin, f".{name}.tmp")
+        table = pa.Table.from_pylist(
+            [dict(zip(LINEAGE_SCHEMA.names, r)) for r in rows],
+            schema=to_arrow_schema(LINEAGE_SCHEMA),
         )
-        lineage.write.mode("append").parquet(self._lineage_dir())
-        return self.spark.read.parquet(out)
+        pq.write_table(table, tmp)
+        os.replace(tmp, os.path.join(lin, name))
 
     def lineage(self) -> DataFrame:
-        return self.spark.read.parquet(self._lineage_dir())
+        return self.spark.read.schema(LINEAGE_SCHEMA).parquet(self._lineage_dir())
 
     def metrics(self) -> DataFrame:
         """Stage-level rollup: rows, partitions, wall time, rows/sec."""
@@ -264,18 +318,14 @@ class CatalogStageRunner:
         wall_ms = int((time.monotonic() - t0) * 1000)
 
         version = (self.committed_version(stage) or 0) + 1
-        committed = self.spark.table(tbl)
-        lineage = (
-            committed.groupBy(F.spark_partition_id().alias("partition_id"))
-            .agg(F.count("*").cast("long").alias("rows"))
-            .select(
-                F.lit(self.run_id).alias("run_id"),
-                F.lit(stage).alias("stage"),
-                F.col("partition_id"),
-                "rows",
-                F.lit(wall_ms).cast("long").alias("wall_ms"),
-                F.lit(version).cast("long").alias("version"),
-            )
+        counts = partition_row_counts(self.spark.table(tbl).inputFiles())
+        lineage = self.spark.createDataFrame(
+            [
+                (self.run_id, stage, pid, n, wall_ms, version)
+                for pid, n in sorted(counts.items())
+            ],
+            "run_id string, stage string, partition_id int, rows long,"
+            " wall_ms long, version long",
         )
         lineage.write.mode("append").format("parquet").saveAsTable(
             self._lineage()

@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from amr_kg_spark.operators.canonicalize import (
@@ -29,6 +30,16 @@ def test_cc_long_chain_converges(spark):
     comp = connected_components(edges)
     assert comp.select("component").distinct().count() == 1
     assert comp.agg(F.min("component")).first()[0] == 0
+
+
+def test_cc_unconverged_at_max_iter_raises(spark):
+    """A path deeper than max_iter rounds of pointer jumping can cover
+    must raise, not return split components."""
+    edges = spark.createDataFrame(
+        [(i, i + 1) for i in range(64)], "src long, dst long"
+    )
+    with pytest.raises(RuntimeError, match="max_iter=2"):
+        connected_components(edges, max_iter=2)
 
 
 def test_canonicalize_merges_props_by_priority(spark):

@@ -12,15 +12,35 @@ Pathogen/Skill nodes and their six edge types (436 dump edges)."""
 
 from __future__ import annotations
 
+import os
+
 from amr_kg_spark.realdata import (
     BASE_EDGE_TYPES,
+    REF_DATA,
     build_base_graph,
     fix_mojibake,
     load_dump_base_triples,
 )
 
+DUMP = "dump/v1.0.csv"
+BASE = [f"AMR/{t}.csv" for t in ("institute", "project", "pathogen", "skill", "person")]
+MIC = ["AMR/pathogen.csv", "MIC/mic-data.tsv"]
+SPARK_TSV = [*MIC, "SPARK/processed_mic_data.tsv"]
+
+
+def _require(*rel: str) -> None:
+    """Precondition: the reference inputs a test reads exist. These tests
+    score the engine against the reference repo's real data and published
+    dump; without them they fail here, naming what is missing."""
+    missing = [
+        p for p in (os.path.join(REF_DATA, r) for r in dict.fromkeys(rel))
+        if not os.path.exists(p)
+    ]
+    assert not missing, f"reference data not found: {missing}"
+
 
 def test_base_subgraph_matches_published_dump(spark):
+    _require(DUMP, *BASE)
     out = build_base_graph(spark)
     got = {
         (fix_mojibake(r.subj), r.pred, fix_mojibake(r.obj))
@@ -45,6 +65,7 @@ def test_base_subgraph_matches_published_dump(spark):
 def test_base_node_names_match_published_dump(spark):
     """Every base-family node name in the dump exists in our build and
     vice versa (per label)."""
+    _require(DUMP, *BASE)
     import csv
 
     out = build_base_graph(spark)
@@ -52,7 +73,7 @@ def test_base_node_names_match_published_dump(spark):
     for r in out["nodes"].collect():
         ours.setdefault(r.label, set()).add(fix_mojibake(r.name))
 
-    with open("/root/reference/data/dump/v1.0.csv", newline="") as f:
+    with open(os.path.join(REF_DATA, DUMP), newline="") as f:
         rows = list(csv.reader(f))
     hdr = rows[0]
     ix = {c: i for i, c in enumerate(hdr)}
@@ -74,6 +95,7 @@ def test_chembl_assay_edges_match_published_dump(spark):
     """The dump's largest family (1009 Pathogen->ChEMBL ASSAY-IN edges,
     67% of the graph) rebuilt from the real mic-data.tsv: P/R >= 0.95
     (names lowercased — the dump predates the .title() display rule)."""
+    _require(DUMP, *MIC)
     from amr_kg_spark.realdata import (
         build_chembl_assay_triples,
         load_dump_chembl_assay_triples,
@@ -103,6 +125,7 @@ def test_spark_assay_edges_match_published_dump(spark):
     only score a REST-independent subset with an empty alias table).
     MIC-covered ChEMBL names are excluded on both sides (already scored by
     the chembl_assay test)."""
+    _require(DUMP, *SPARK_TSV)
     from amr_kg_spark.realdata import (
         build_spark_assay_triples,
         load_dump_spark_assay_triples,
@@ -147,6 +170,7 @@ def test_offline_alias_join_is_exercised(spark):
     snapshot's iupac names surface on PubChem nodes and its synonyms on
     new-ChEMBL nodes (reference src/sources.py:105,117 done as a
     broadcast-joined vocabulary table instead of live REST)."""
+    _require(*SPARK_TSV)
     from amr_kg_spark.realdata import (
         build_spark_assay_triples,
         load_offline_pubchem_alias,
@@ -174,6 +198,7 @@ def test_combined_dump_parity(spark):
     identity-level triples) rebuilt from the reference's real inputs plus
     the offline alias snapshot. Round 3 reached P=1.000/R=0.984 with 53
     REST-named triples excluded; the alias closes that gap."""
+    _require(DUMP, *BASE, *SPARK_TSV)
     from amr_kg_spark.realdata import (
         build_base_graph,
         build_chembl_assay_triples,
@@ -227,7 +252,7 @@ def _render(cells: list[str | None]) -> str:
 def _parse_dump_rows():
     import csv
 
-    with open("/root/reference/data/dump/v1.0.csv", newline="", encoding="utf-8") as f:
+    with open(os.path.join(REF_DATA, DUMP), newline="", encoding="utf-8") as f:
         raw_lines = f.read().splitlines()
     rows = list(csv.reader(raw_lines))
     hdr = rows[0]
@@ -276,6 +301,7 @@ def test_dump_bytes_base_families(spark):
     every parsed base row under the row-kind rule reproduces its raw line.
     Step 2 then diffs the engine's rendered rows against the raw lines.
     """
+    _require(DUMP, *BASE)
     from collections import Counter
 
     import pyspark.sql.functions as F

@@ -3,10 +3,15 @@ resume, identical triple set; lineage rows recorded per partition."""
 
 from __future__ import annotations
 
+import os
+import shutil
 import tempfile
 
+import pytest
+from pyspark.sql import functions as F
+
 from amr_kg_spark.fixtures import synth_transcripts
-from amr_kg_spark.lineage import StageRunner
+from amr_kg_spark.lineage import StageRunner, _data_files, partition_row_counts
 from amr_kg_spark.pipeline import run_pipeline
 
 
@@ -54,19 +59,93 @@ def test_resume_after_partial_run_yields_identical_triples(spark):
         assert by_stage["triples"] == {"resumed"}
 
 
+class _Recorder:
+    """runner= wrapper that keeps the frame each stage's run() returned."""
+
+    def __init__(self, inner):
+        self.inner, self.out = inner, {}
+
+    def run(self, stage, build):
+        self.out[stage] = self.inner.run(stage, build)
+        return self.out[stage]
+
+    def __getattr__(self, name):
+        return getattr(self.inner, name)
+
+
 def test_lineage_partition_counts_sum_to_rows(spark):
+    """For every stage of the canonicalizing pipeline: the footer-derived
+    lineage rows sum to the stage's count(), and the schema-pinned
+    read-back equals what schema inference reads from the stage dir."""
     t = synth_transcripts(spark, n_turns=1000, n_convs=20)
     with tempfile.TemporaryDirectory() as w:
-        d = run_pipeline(spark, t, w, run_id="r1")
-        lin = d["lineage"]
+        rec = _Recorder(StageRunner(spark, w, run_id="r1"))
+        d = run_pipeline(spark, t, runner=rec, canonicalize=True)
         got = {
             r.stage: r.total
-            for r in lin.groupBy("stage").sum("rows").withColumnRenamed("sum(rows)", "total").collect()
+            for r in d["lineage"].groupBy("stage").agg(F.sum("rows").alias("total")).collect()
         }
-        assert got["triples"] == d["triples"].count()
-        assert got["nodes"] == d["nodes"].count()
+        assert set(got) == set(rec.out) and len(got) == 9
+        for stage, df in rec.out.items():
+            assert got[stage] == df.count(), stage
+            inferred = spark.read.parquet(f"{w}/stages/{stage}").schema
+            assert df.schema == inferred, stage
         m = {r.stage: r.rows_per_sec for r in d["metrics"].collect()}
         assert all(v is not None for v in m.values())
+
+
+def test_stage_commit_is_one_spark_job(spark, monkeypatch):
+    """A fresh commit launches exactly one Spark job (the stage write);
+    building lineage()/metrics() launches none; a crash between the
+    lineage temp write and its rename leaves nothing lineage() reads."""
+    sc = spark.sparkContext
+    bus = sc._jsc.sc().listenerBus()
+
+    def jobs_in(group, fn):
+        sc.setJobGroup(group, group)
+        try:
+            result = fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        bus.waitUntilEmpty()
+        return result, len(sc.statusTracker().getJobIdsForGroup(group))
+
+    with tempfile.TemporaryDirectory() as w:
+        runner = StageRunner(spark, w, run_id="one")
+        df, n = jobs_in("commit-one-job", lambda: runner.run(
+            "s", lambda: spark.range(0, 1000, 1, 4).selectExpr("id", "id % 7 AS k")
+        ))
+        assert n == 1
+        (lin, _), n = jobs_in("lineage-reads", lambda: (runner.lineage(), runner.metrics()))
+        assert n == 0
+        assert {(r.partition_id, r.rows) for r in lin.collect()} == {
+            (p, 250) for p in range(4)
+        }
+        assert df.count() == 1000
+
+        def crash(src, dst):
+            raise OSError("crash before the lineage rename")
+
+        with monkeypatch.context() as m:
+            m.setattr(os, "replace", crash)
+            with pytest.raises(OSError, match="lineage rename"):
+                runner.run("t", lambda: spark.range(0, 10))
+        assert any(f.startswith(".") for f in os.listdir(f"{w}/lineage"))
+        assert {r.stage: r.rows for r in runner.metrics().collect()} == {"s": 1000}
+
+
+def test_partition_row_counts_rejects_misnamed_file(spark):
+    """Footer counting never skips a data file it cannot attribute to a
+    write task: a file in a committed dir not named part-<int>-... raises,
+    naming the file."""
+    with tempfile.TemporaryDirectory() as w:
+        out = f"{w}/out"
+        spark.range(0, 100, 1, 2).write.parquet(out)
+        assert partition_row_counts(_data_files(out)) == {0: 50, 1: 50}
+        shutil.copy(_data_files(out)[0], f"{out}/misnamed.parquet")
+        with pytest.raises(ValueError, match="misnamed.parquet"):
+            partition_row_counts(_data_files(out))
 
 
 def test_pipeline_with_canonicalization_stage(spark):
